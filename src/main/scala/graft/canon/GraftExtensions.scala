@@ -76,6 +76,9 @@ object GraftExtensions {
           litInt("winnow_set(norm, k, w)", args(1)),
           litInt("winnow_set(norm, k, w)", args(2)))),
       unary("html_to_text", graft.text.TextExtract.HtmlToText.apply),
+      // text scoring kernels, the same calls as TextOps.langId/qualityScore
+      unary("lang_id", graft.text.TextScore.langIdOf),
+      unary("quality_score", graft.text.TextScore.qualityScoreOf),
       // ANN vector kernels
       unary("quantize_vec", AnnExpr.QuantizeVec.apply),
       fn("dot_q", 2, args => AnnExpr.DotQ(args(0), args(1))),

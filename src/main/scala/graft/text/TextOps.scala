@@ -6,12 +6,18 @@ import org.apache.spark.sql.functions._
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language ID, quality scoring, fingerprinting, shingling.
   *
-  * All pure Column expressions (codegen'd, no UDFs) built from portable
-  * primitives so each has an exact DuckDB-SQL oracle:
-  *  - token counts via regexp split + empty-filter
-  *  - occurrence counts via length-difference (replace-based)
-  *  - hashes via md5 hex -> integer (conv)
-  *  - ratios via floor(1000 * a / b) (integer in, IEEE-exact out)
+  * No UDFs; every operator has an exact DuckDB-SQL oracle. Three kinds:
+  *  - fused kernels, one static call per row, each with a Column twin
+  *    kept as its executable spec: [[langId]] / [[langIdCol]] and
+  *    [[qualityScore]] / [[qualityScoreCol]] ([[TextScore]]),
+  *    [[winnowSet]] / [[winnowSetCol]] (dedup.TextDedupExpr);
+  *  - codegen'd Column expressions built from portable primitives:
+  *    token counts via regexp split + empty-element removal, occurrence
+  *    counts via length-difference (replace-based), hashes via md5 hex
+  *    -> integer (conv), ratios via floor(1000 * a / b);
+  *  - Column expressions over higher-order lambdas, which Spark runs
+  *    interpreted: [[subwordCount]], [[shingles]], [[winnowHashes]] (and
+  *    the staged twin chain around it).
   */
 object TextOps {
 
@@ -20,7 +26,7 @@ object TextOps {
 
   /** Non-empty whitespace tokens of lowercased text. */
   def tokens(text: Column): Column =
-    filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
+    array_remove(split(lower(trim(text)), "\\s+"), "")
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -54,29 +60,50 @@ object TextOps {
       .reduce(_ + _)
   }
 
+  /** FUSED (TextScore.LangId over `lower(text)`); null text -> the first
+    * language, as in [[langIdCol]].
+    */
   def langId(text: Column): Column = {
-    // argmax with first-listed-wins tie-break (strict > against the
-    // accumulated best, folding in listed order)
-    val scored = langMarkers.map { case (l, ms) => (l, langScore(text, ms)) }
-    scored.tail.foldLeft((lit(scored.head._1), scored.head._2)) {
-      case ((bestLang, bestScore), (l, s)) =>
-        (when(s > bestScore, lit(l)).otherwise(bestLang),
-          when(s > bestScore, s).otherwise(bestScore))
-    }._1
+    import org.apache.spark.sql.GraftExpr
+    GraftExpr.column(TextScore.langIdOf(GraftExpr.expression(text)))
   }
+
+  /** Declarative twin of [[langId]]: one `greatest` over
+    * struct(score, rank, lang) per language, where a language listed
+    * earlier has a higher rank and so wins ties. Linear in the number of
+    * languages (a running-best fold would repeat the best score in both
+    * branches of each `when`, doubling the tree per language).
+    */
+  def langIdCol(text: Column): Column = {
+    val n = langMarkers.length
+    greatest(langMarkers.zipWithIndex.map { case ((l, ms), i) =>
+      struct(langScore(text, ms).as("score"), lit(n - i).as("rank"),
+        lit(l).as("lang"))
+    }: _*).getField("lang")
+  }
+
+  /** Stopwords of the quality score's stopword ratio. */
+  val qualityStops: Seq[String] = Seq(" the ", " and ", " of ", " a ", " in ")
 
   /** Quality score in [0, ~3000]: 1000*alpha_ratio + 1000*stopword_ratio
     * + 1000*uniq_token_ratio, floored to an exact integer. Higher = more
     * natural-language-like. Every term is floor(1000*int/int) — bit-exact
-    * in any engine.
+    * in any engine. FUSED (TextScore.QualityScore over `text` and
+    * `lower(text)`); null text -> 0, as in [[qualityScoreCol]].
     */
   def qualityScore(text: Column): Column = {
+    import org.apache.spark.sql.GraftExpr
+    GraftExpr.column(TextScore.qualityScoreOf(GraftExpr.expression(text)))
+  }
+
+  /** Declarative twin of [[qualityScore]]. */
+  def qualityScoreCol(text: Column): Column = {
     val t = tokens(text)
     val nTok = size(t).cast("long")
     val nUniq = size(array_distinct(t)).cast("long")
     val alpha = (length(regexp_replace(lower(text), "[^a-z]", "")).cast("long"))
     val nChars = length(text).cast("long")
-    val stops = langScore(text, Seq(" the ", " and ", " of ", " a ", " in "))
+    val stops = langScore(text, qualityStops)
     val safe = (d: Column, n: Column) =>
       when(n > 0, floor(d * 1000.0 / n).cast("long")).otherwise(lit(0L))
     safe(alpha, nChars) + safe(stops, nTok) + safe(nUniq, nTok)
